@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark entry point. Prints `{"metric":"total",...}` JSON lines on
   * stdout; the driver tails the output and keeps the LAST parseable line.
@@ -99,27 +99,53 @@ object Bench {
     "q_ivf_search_exact", "q_pq_search_exact", "q_semdedup_delta",
     "q_bpe_tokens", "q_pq_topk")
 
-  /** MICRO Spark calibration: a fixed CPU-only job small enough (~15 ms
-    * quiet) to sample every ~20 s WITHOUT perturbing the measured queries.
-    * The r14 post-mortem: the driver window ran queries 20-50x slow while
-    * the ENDPOINT probes read near-quiet (calib_spark 0.66) — instants at
-    * the edges missed the window entirely. A timeline of these samples,
-    * summarized as min/med/max in the final line, makes a capture from a
-    * degraded window explain its own numbers. */
-  private[graft] def microCalibSec(spark: SparkSession): Double = {
+  /** Fixed CPU-only Spark calibration job: `rows` xxhash64+sum over
+    * `slices` range tasks — codegen + scheduling + two-phase agg, zero IO.
+    * Two sizes are in use:
+    *   - the default MICRO size (~15 ms quiet) is small enough to sample
+    *     every ~20 s WITHOUT perturbing the measured queries. The r14
+    *     post-mortem: the driver window ran queries 20-50x slow while the
+    *     ENDPOINT probes read near-quiet (calib_spark 0.66) — instants at
+    *     the edges missed the window entirely. A timeline of these samples,
+    *     summarized as min/med/max in the final line, makes a capture from
+    *     a degraded window explain its own numbers;
+    *   - `calib_spark` (256M rows over 32 tasks, once per run): the
+    *     round-11 forensics found the host can run Spark work ~1.5-2×
+    *     slower ACROSS ROUNDS while the spin probes read identical
+    *     (host-vintage scheduler/memory effects raw ALU loops miss); this
+    *     constant makes that visible in the bench line itself.
+    * & 1048575 bounds the addends: round-15 forensics found the raw sum of
+    * 64-bit hashes OVERFLOWS under ANSI mode (Spark 4 default) within the
+    * first few rows of each task, so every capture until then timed a fast
+    * job-abort, not the fixed work (baselines were re-blessed same-round so
+    * calib_spark_ref and runs stay same-units). */
+  private[graft] def sparkCalibSec(spark: SparkSession,
+      rows: Long = 4000000L, slices: Int = 4): Double = {
     val t0 = System.nanoTime()
-    // & 1048575 bounds the addends: a raw sum of 64-bit hashes overflows
-    // under ANSI mode (Spark 4 default) and ABORTS the job — the probe
-    // would time an exception path, not the fixed work
-    try spark.range(0L, 4000000L, 1L, 4)
+    try spark.range(0L, rows, 1L, slices)
       .selectExpr("sum(xxhash64(id) & 1048575) AS s").collect()
     catch { case _: Throwable => () }
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** The one timed run of a registry entry: build `fn` against `dir` and
+    * count it. Returns the wall seconds, or the failure — a run that threw
+    * measured NOTHING, so callers record only successes (a time-to-exception
+    * as a minimum would be bogus, and the resumable state would persist
+    * it). `Throwable`, not NonFatal: a StackOverflowError out of a deep plan
+    * fails that one entry, never the whole capture. */
+  def measure(spark: SparkSession, fn: (SparkSession, String) => DataFrame,
+      dir: String): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, dir).count()
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable => Left(e) }
+  }
+
   /** Timed cold-path read of one parquet footer region (~64 KiB via the
     * Hadoop FS API, no Spark job): separates IO starvation from CPU steal —
-    * a throttle window that inflates [[microCalibSec]] but not this is
+    * a throttle window that inflates [[sparkCalibSec]] but not this is
     * compute-side; both inflating means the storage path is starved too. */
   private[graft] def ioProbeSec(spark: SparkSession, sfDir: String): Double = {
     val t0 = System.nanoTime()
@@ -183,29 +209,10 @@ object Bench {
     }
     if (elapsed() < budgetSec * 0.2)
       try sources.Tables.events(spark, sfDir).count() catch { case _: Throwable => () }
-    // SPARK-WORK calibration (complements the raw spin probes): a fixed
-    // CPU-only Spark job — 256M xxhash64+sum over 32 range tasks, codegen +
-    // scheduling + two-phase agg, zero IO. The round-11 forensics found the
-    // host can run Spark work ~1.5-2× slower ACROSS ROUNDS while the spin
-    // probes read identical (host-vintage scheduler/memory effects raw ALU
-    // loops miss); this constant makes that visible in the bench line
-    // itself. Runs after warmup so one-time session init never contaminates
-    // it. Quiet-host reference in SURVEY §8.
-    // & 1048575: round-15 forensics — the raw sum of 64-bit hashes
-    // OVERFLOWS under ANSI mode (Spark 4 default) within the first few
-    // rows of each task, so every capture to date timed a fast job-abort
-    // (scheduling + codegen + exception path: ~0.46 s here vs 0.58 ref —
-    // it still tracked host vintage, which is why the gate arithmetic
-    // stayed consistent). Bounded addends make it the designed fixed
-    // 256M-row scan+hash+sum; baselines re-blessed same-round so
-    // calib_spark_ref and runs stay same-units.
-    val calibSpark = {
-      val t0 = System.nanoTime()
-      try spark.range(0L, 256000000L, 1L, 32)
-        .selectExpr("sum(xxhash64(id) & 1048575) AS s").collect()
-      catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
-    }
+    // SPARK-WORK calibration (complements the raw spin probes; see
+    // sparkCalibSec). Runs after warmup so one-time session init never
+    // contaminates it. Quiet-host reference in SURVEY §8.
+    val calibSpark = sparkCalibSec(spark, rows = 256000000L, slices = 32)
 
     // Locale.ROOT: a comma-decimal default locale would emit invalid JSON
     def r3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
@@ -217,6 +224,16 @@ object Bench {
     val headlineRank = headline.zipWithIndex.toMap
     val queryList = SparkEntry.queries.toSeq.sortBy { case (name, _) =>
       (headlineRank.getOrElse(name, Int.MaxValue), name) }
+    // Every timed run goes through here: entries that threw at ANY site
+    // (warm-up, measured, downshifted, retest) are named in the JSON line's
+    // `failed` list instead of vanishing from the capture.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def timed(name: String, fn: (SparkSession, String) => DataFrame,
+        dir: String): Option[Double] =
+      measure(spark, fn, dir) match {
+        case Right(dt) => Some(dt)
+        case Left(_) => failed += name; None
+      }
 
     // SMALL-SF WARM-UP SWEEP (round-11 verdict item 1): run every registry
     // query once against the SMALLEST sibling scale factor before any
@@ -261,14 +278,9 @@ object Bench {
          -benchBaseline.mins.getOrElse(name, Double.MaxValue)) }.iterator
       while (it.hasNext && elapsed() < warmupDeadline) {
         val (name, fn) = it.next()
-        val w0 = System.nanoTime()
-        // record only SUCCESSFUL runs: a query that threw never measured
-        // anything, and its time-to-exception must not later count as
-        // labeled breadth in the fallback accounting
-        try {
-          fn(spark, warmupDir).count()
-          warmupTimes(name) = (System.nanoTime() - w0) / 1e9
-        } catch { case _: Throwable => () }
+        // success-only: a time-to-exception must not later count as labeled
+        // breadth in the fallback accounting
+        timed(name, fn, warmupDir).foreach(warmupTimes(name) = _)
         warmupN += 1
         // pace cap (r14: the sweep burnt 90 s covering 19 entries at ~5 s
         // each in a throttled window — a quiet host does ~0.3-0.4 s/entry).
@@ -289,7 +301,7 @@ object Bench {
     val mcalSamples = scala.collection.mutable.ArrayBuffer.empty[Double]
     val ioSamples = scala.collection.mutable.ArrayBuffer.empty[Double]
     def sampleProbes(): Unit = {
-      mcalSamples += microCalibSec(spark)
+      mcalSamples += sparkCalibSec(spark)
       ioSamples += ioProbeSec(spark, sfDir)
     }
     sampleProbes() // one sample before any measured work brackets the start
@@ -321,7 +333,7 @@ object Bench {
       if (elapsed() - hostProbeCache._2 > 20.0) {
         val mcalRatio =
           if (benchBaseline.mcalRef > 0) {
-            val s = Seq.fill(3)(microCalibSec(spark)).sorted
+            val s = Seq.fill(3)(sparkCalibSec(spark)).sorted
             s(1) / benchBaseline.mcalRef
           } else 1.0
         val mtRatio =
@@ -392,6 +404,9 @@ object Bench {
       val coldFlags = allFlags.filter(nMeasured(_) == 1)
       val coldJson = coldFlags.take(8).map(n => s"\"$n\"").mkString("[", ",", "]")
       val retests = s""""retests":$retestN"""
+      // entries whose run threw (any site), capped at 8 like regressions;
+      // failed_n carries the uncapped count
+      val failedJson = failed.take(8).map(n => s"\"$n\"").mkString("[", ",", "]")
       val total = if (best.nonEmpty) best.values.sum else 0.0
       // calibration in Mops/s; *_post stay 0.0 until the post-run probes fire
       val calib = s""""calib_st_pre":${r3(calibStPre)},"calib_mt_pre":${r3(calibMtPre)},"calib_st_post":${r3(calibStPost)},"calib_mt_post":${r3(calibMtPost)},"calib_spark":${r3(calibSpark)}"""
@@ -436,7 +451,7 @@ object Bench {
       val downN = downOnly.size + fallback.size
       val downTotal = downOnly.values.sum + fallback.values.sum
       val down = s""""n_sf":${best.size},"downshift_n":$downN,"downshift_total":${r3(downTotal)},"downshift":$downJson"""
-      println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","t":${r3(elapsed())},"n_queries":$nAll,$down,"pass":$pass,"complete":$complete,"full_passes":$fullPasses,"headline_passes":$headlinePasses,"headline_target":$headlineTarget,"degraded":$degraded,"warmup_n":$warmupN,"warmup_t":${r3(warmupT)},"resumed_n":$resumedN,"regressions":$regsJson,"regressions_n":${regs.size},"cold_flags":$coldJson,"cold_flags_n":${coldFlags.size},$retests,$probes,$probeRefs,$calib,"queries":$qs,"sf":"$sfDir"}""")
+      println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","t":${r3(elapsed())},"n_queries":$nAll,$down,"pass":$pass,"complete":$complete,"full_passes":$fullPasses,"headline_passes":$headlinePasses,"headline_target":$headlineTarget,"degraded":$degraded,"warmup_n":$warmupN,"warmup_t":${r3(warmupT)},"resumed_n":$resumedN,"regressions":$regsJson,"regressions_n":${regs.size},"cold_flags":$coldJson,"cold_flags_n":${coldFlags.size},$retests,"failed_n":${failed.size},"failed":$failedJson,$probes,$probeRefs,$calib,"queries":$qs,"sf":"$sfDir"}""")
       System.out.flush()
       // persist the accumulated measured-scale minima at every emit point:
       // a driver-killed run still leaves its coverage on disk for the next
@@ -475,17 +490,32 @@ object Bench {
     // phase after ~3 entries and spends the budget on breadth.
     val headlineList = queryList.filter { case (n, _) => headlineRank.contains(n) }
     val phaseStart = elapsed()
-    while (headlinePasses < headlineTarget && !outOfTime) {
+    // success-only recording at every measured-scale site: a query that
+    // threw measured NOTHING (see `measure`)
+    def record(name: String, dt: Double): Unit = {
+      best.updateWith(name)(prev => Some(prev.fold(dt)(math.min(_, dt))))
+      nMeasured(name) += 1
+      pace.observe(name, dt)
+    }
+    // One measured-scale pass over the frozen contract subset. `adaptive`
+    // is the phase above: re-project between entries and cut the phase when
+    // it stops fitting. Its first pass runs entries with NO measured-scale
+    // reading first (resumed entries already hold a warm minimum from a
+    // prior window — re-measuring them before never-measured ones would
+    // make consecutive tight windows re-tread the same prefix instead of
+    // ACCUMULATING coverage); every other pass repairs slowest-first, same
+    // rationale as the main loop.
+    // Non-adaptive is the HEADLINE RECOVERY pass (round-19, VERDICT r18
+    // item 5), run BETWEEN full passes the moment breadth is secured (r18's
+    // recovery only ran after the whole pass loop, by which time a second
+    // full pass had spent the budget and headline_passes read 0 in a window
+    // that measured all 237 entries), and again after the loop for windows
+    // that never afforded it earlier.
+    def headlinePass(adaptive: Boolean): Unit = {
       var aborted = false
       var phaseAborted = false
-      // phase pass 1 runs entries with NO measured-scale reading first
-      // (resumed entries already hold a warm minimum from a prior window —
-      // re-measuring them before never-measured ones would make
-      // consecutive tight windows re-tread the same prefix instead of
-      // ACCUMULATING coverage); pass 2 repairs slowest-first, same
-      // rationale as the main loop
       val order =
-        if (headlinePasses == 0)
+        if (adaptive && headlinePasses == 0)
           headlineList.sortBy { case (n, _) =>
             (if (nMeasured(n) == 0) 0 else 1, headlineRank(n)) }
         else headlineList.sortBy { case (n, _) => -best.getOrElse(n, Double.MaxValue) }
@@ -493,75 +523,36 @@ object Bench {
       var done = 0
       while (it.hasNext && !aborted && !phaseAborted) {
         val (name, fn) = it.next()
-        val q0 = System.nanoTime()
-        // success-only recording (the warm-up/downshift rule, applied to
-        // every measured site): a query that threw measured NOTHING — its
-        // time-to-exception in `best` would be a bogus minimum that the
-        // resumable state now PERSISTS across invocations, masking any
-        // real regression for that entry until the tree changes
-        try {
-          fn(spark, sfDir).count()
-          val dt = (System.nanoTime() - q0) / 1e9
-          best.updateWith(name)(prev => Some(prev.fold(dt)(math.min(_, dt))))
-          nMeasured(name) += 1
-          pace.observe(name, dt)
-        } catch { case _: Throwable => () }
+        timed(name, fn, sfDir).foreach(record(name, _))
         done += 1
-        val target = BenchGate.headlineTarget(
-          pace,
-          remainingThisPass = order.drop(done).map(_._1),
-          headlineAll = if (headlinePasses == 0 && headlineTarget == 2)
-            headlineList.map(_._1) else Seq.empty,
-          unmeasuredRest = queryList.collect {
-            case (n, _) if nMeasured(n) == 0 => n },
-          elapsed = elapsed(), budget = budgetSec, reserve = reserveSec,
-          phaseSpent = elapsed() - phaseStart)
-        if (target < headlineTarget) {
-          headlineTarget = target
-          degraded = true
-          if (headlinePasses >= target) phaseAborted = true // mid-pass cut
+        if (adaptive) {
+          val target = BenchGate.headlineTarget(
+            pace,
+            remainingThisPass = order.drop(done).map(_._1),
+            headlineAll = if (headlinePasses == 0 && headlineTarget == 2)
+              headlineList.map(_._1) else Seq.empty,
+            unmeasuredRest = queryList.collect {
+              case (n, _) if nMeasured(n) == 0 => n },
+            elapsed = elapsed(), budget = budgetSec, reserve = reserveSec,
+            phaseSpent = elapsed() - phaseStart)
+          if (target < headlineTarget) {
+            headlineTarget = target
+            degraded = true
+            if (headlinePasses >= target) phaseAborted = true // mid-pass cut
+          }
         }
-        if (elapsed() > budgetSec - reserveSec) { aborted = true; outOfTime = true }
-        else if (elapsed() - lastEmit > 20.0) {
-          sampleProbes(); emit(0, complete = false); lastEmit = elapsed()
-        }
-      }
-      if (!aborted && !phaseAborted) headlinePasses += 1
-      if (phaseAborted) headlinePasses = headlineTarget // exit the phase loop
-      emit(0, complete = false)
-      lastEmit = elapsed()
-    }
-    // HEADLINE RECOVERY pass runner (round-19, VERDICT r18 item 5): one
-    // warm measured-scale pass over the frozen contract subset,
-    // slowest-first. Called BETWEEN full passes the moment breadth is
-    // secured (r18's recovery only ran after the whole pass loop, by which
-    // time a second full pass had spent the budget and headline_passes
-    // read 0 in a window that measured all 237 entries), and again after
-    // the loop for windows that never afforded it earlier.
-    def headlineRecoveryPass(): Unit = {
-      var aborted = false
-      val it = headlineList.sortBy { case (n, _) =>
-        -best.getOrElse(n, Double.MaxValue) }.iterator
-      while (it.hasNext && !aborted) {
-        val (name, fn) = it.next()
-        val q0 = System.nanoTime()
-        // success-only, same rationale as the headline phase
-        try {
-          fn(spark, sfDir).count()
-          val dt = (System.nanoTime() - q0) / 1e9
-          best.updateWith(name)(prev => Some(prev.fold(dt)(math.min(_, dt))))
-          nMeasured(name) += 1
-          pace.observe(name, dt)
-        } catch { case _: Throwable => () }
         if (elapsed() > budgetSec - reserveSec) { aborted = true; outOfTime = true }
         else if (elapsed() - lastEmit > 20.0) {
           sampleProbes(); emit(pass, complete = lastComplete); lastEmit = elapsed()
         }
       }
-      if (!aborted) headlinePasses += 1
+      if (phaseAborted) headlinePasses = headlineTarget // exit the phase loop
+      else if (!aborted) headlinePasses += 1
       emit(pass, complete = lastComplete)
       lastEmit = elapsed()
     }
+    while (headlinePasses < headlineTarget && !outOfTime)
+      headlinePass(adaptive = true)
 
     // Always start the next pass if budget remains: pass 1 still carries
     // whatever one-time cost the warm-up sweep didn't absorb (sf0.1-sized
@@ -637,28 +628,18 @@ object Bench {
             }
           }
           val dir = downLadder(downLevel)
-          val q0 = System.nanoTime()
-          // record only SUCCESSFUL completions (same rule the warm-up
-          // sweep follows): a query that threw at the smaller scale — a
-          // fixture missing at sf0.001, say — measured nothing, and its
-          // time-to-exception must not count as labeled downshift breadth
-          try {
-            fn(spark, dir).count()
-            val dt = (System.nanoTime() - q0) / 1e9
+          // success-only: a query that threw at the smaller scale — a
+          // fixture missing at sf0.001, say — must not count as labeled
+          // downshift breadth
+          timed(name, fn, dir).foreach { dt =>
             bestDown.updateWith(name)(prev => Some(prev.fold(dt)(math.min(_, dt))))
             if (!downDir.contains(name)) downDir(name) = dir
             downObs += dt
-          } catch { case _: Throwable => () }
+          }
         } else {
-          val q0 = System.nanoTime()
-          // success-only, same rationale as the headline phase
-          try {
-            fn(spark, sfDir).count()
-            val dt = (System.nanoTime() - q0) / 1e9
-            best.updateWith(name)(prev => Some(prev.fold(dt)(math.min(_, dt))))
-            nMeasured(name) += 1
-            pace.observe(name, dt) // keeps the recovery projection warm-informed
-          } catch { case _: Throwable => () }
+          // pace.observe inside record keeps the recovery projection
+          // warm-informed
+          timed(name, fn, sfDir).foreach(record(name, _))
         }
         // measured passes stop `reserveSec` short of the budget: the
         // reserve pays for the flag-retest pass below (isolated re-measures
@@ -686,7 +667,7 @@ object Bench {
       while (BenchGate.recoverHeadlineNow(fullPasses >= 1, headlinePasses,
           pace.project(headline), elapsed(), budgetSec, reserveSec) &&
           !outOfTime)
-        headlineRecoveryPass()
+        headlinePass(adaptive = false)
     }
     // POST-LOOP RECOVERY: windows whose sweeps all downshifted (fullPasses
     // 0) can still afford warmth once the breadth phase is over either way
@@ -694,7 +675,7 @@ object Bench {
     // expense.
     while (BenchGate.recoverHeadlineNow(breadthSecured = true, headlinePasses,
         pace.project(headline), elapsed(), budgetSec, reserveSec) && !outOfTime)
-      headlineRecoveryPass()
+      headlinePass(adaptive = false)
     // FLAG RETEST (self-triaging gate): re-measure any currently-flagged
     // query in isolation before reporting it — in-battery interference on
     // floor-adjacent entries does not survive an isolated warm re-measure,
@@ -704,13 +685,9 @@ object Bench {
       val (retested, n) = BenchGate.retestFlags(
         best.toMap, benchBaseline, calibSpark,
         name => SparkEntry.queries.get(name).flatMap { fn =>
-          val q0 = System.nanoTime()
-          // success-only: a retest that threw produced no measurement
-          try {
-            fn(spark, sfDir).count()
-            nMeasured(name) += 1
-            Some((System.nanoTime() - q0) / 1e9)
-          } catch { case _: Throwable => None }
+          val dt = timed(name, fn, sfDir)
+          dt.foreach(_ => nMeasured(name) += 1)
+          dt
         },
         () => elapsed() < budgetSec - 5.0,
         calibMtRun = calibMtPre)

@@ -74,11 +74,8 @@ object SessionFactory {
       // battery-wide — many-small-task overhead on every tiny shuffle
       // (q_pagerank 1.81x, q_parts_supplier_count 2.39x, q_khop_reach
       // 1.38x) — against at best -5% on the similarity-verify stages it
-      // was meant to keep parallel. Default restored to Spark's 1m; the
-      // env knob stays for cluster profiles where a deliberate floor is
-      // wanted.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"))
+      // was meant to keep parallel. Spark's default 1m restored.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
       // split large files so scan parallelism tracks the cluster, not the
       // writer's file layout
       .config("spark.sql.files.maxPartitionBytes", s"${128 * 1024 * 1024}")

@@ -59,18 +59,4 @@ object SpinProbe {
     threads.foreach(_.join())
     n.toLong * itersPerThread / ((System.nanoTime() - t0) / 1e9) / 1e6
   }
-
-  /** Dev main: print both probe values with wall times, for picking work
-    * sizes and recording the quiet-host reference in SURVEY §8. */
-  def main(args: Array[String]): Unit = {
-    for (_ <- 1 to 2) {
-      var t0 = System.nanoTime()
-      val st = singleThread()
-      val stSec = (System.nanoTime() - t0) / 1e9
-      t0 = System.nanoTime()
-      val mt = allCores()
-      val mtSec = (System.nanoTime() - t0) / 1e9
-      println(f"st=$st%.0f Mops/s (${stSec}%.2f s)  mt=$mt%.0f Mops/s (${mtSec}%.2f s)")
-    }
-  }
 }

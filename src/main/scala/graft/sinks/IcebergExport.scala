@@ -126,7 +126,7 @@ object IcebergExport {
     * lets a reader skip whole manifests without opening them (VERDICT r18
     * item 1): a 10,000-manifest table with a selective partition predicate
     * must plan O(query), not O(table). */
-  private[sinks] val manifestListSchema: org.apache.avro.Schema =
+  private[graft] val manifestListSchema: org.apache.avro.Schema =
     new org.apache.avro.Schema.Parser().parse(
       """{"type":"record","name":"manifest_file","fields":[
         |{"name":"manifest_path","type":"string","field-id":500},
@@ -203,7 +203,7 @@ object IcebergExport {
   /** Manifest-entry schema for identity partition fields `(name, avroType)`
     * — the r102 partition record carries one optional field per partition
     * column, ids from 1000 (the spec's partition-field id space). */
-  private[sinks] def manifestSchema(
+  private[graft] def manifestSchema(
       partFields: Seq[(String, String)]): org.apache.avro.Schema = {
     val partJson = partFields.zipWithIndex.map { case ((n, t), i) =>
       s"""{"name":"$n","type":["null",$t],"default":null,"field-id":${1000 + i}}"""

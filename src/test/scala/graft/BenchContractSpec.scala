@@ -86,6 +86,7 @@ class BenchContractSpec extends AnyFunSuite {
       "warmup_n", "warmup_t", "resumed_n",
       "n_sf", "downshift_n", "downshift_total", "downshift",
       "regressions", "regressions_n", "cold_flags", "cold_flags_n",
+      "failed_n", "failed",
       "mcal_n", "mcal_min", "mcal_med", "mcal_max",
       "io_n", "io_min", "io_med", "io_max", "mcal_ref", "io_ref",
       "calib_st_pre", "calib_mt_pre", "calib_st_post", "calib_mt_post",

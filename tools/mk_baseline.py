@@ -50,7 +50,7 @@ def lower_median(vs):
     return vs[(len(vs) - 1) // 2]
 
 # carry the quiet probe-timeline references forward: mcal_ref/io_ref are
-# blessed separately (graft.ProbeRef captures, not bench dumps), so a
+# blessed separately (graft.Inspect calib captures, not bench dumps), so a
 # per-query re-bless must preserve them rather than silently dropping the
 # keys from the resource
 prev_refs = {}

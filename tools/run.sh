@@ -1,8 +1,10 @@
 #!/bin/bash
 # Run a graft main class against the compiled sbt output without sbt startup
-# overhead. Usage: tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/out
+# overhead. Usage: tools/run.sh graft.Verify <sfDir> <outDir>
 set -e
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+# classes of THIS checkout (the one holding the script), wherever it lives
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:/opt/spark/jars/*"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
